@@ -395,6 +395,11 @@ def _int_lit_array_sql(values) -> str:
     return "array(" + ",".join(str(int(v)) for v in values) + ")"
 
 
+def _quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lang_id_scores(
     df: DataFrame,
     text_col: str,
@@ -422,6 +427,9 @@ def lang_id_scores(
     impl = _resolve_impl(impl, n_buckets, "impl")
     if impl == "arrow":
         return _langid_arrow(df, text_col, id_col, m, n_buckets)
+    # the id column as an identifier: names with spaces or dots are
+    # taken literally by F.col and the selectExpr stages below
+    id_ref = _quote(id_col)
 
     # STAGED projections so every expensive expression is evaluated
     # ONCE: md5 buckets hashed once (not once per language), each
@@ -436,9 +444,9 @@ def lang_id_scores(
     # to the HOF pipeline itself). Expression semantics are identical
     # — the SQL text parses to the same Catalyst tree the DSL built.
     t = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), WS_RE, " ")
+        F.regexp_replace(F.lower(F.col(_quote(text_col))), WS_RE, " ")
     )
-    staged0 = df.select(F.col(id_col), t.alias("_t"))
+    staged0 = df.select(F.col(id_ref), t.alias("_t"))
     empty = "CAST(array() AS array<string>)"
     grams_sql = (
         "CASE WHEN length(_t) >= 1 THEN concat("
@@ -454,7 +462,7 @@ def lang_id_scores(
         f", 1, 15), 16, 10) AS BIGINT) % {int(n_buckets)} AS INT))"
     )
     staged = staged0.select(
-        F.col(id_col),
+        F.col(id_ref),
         F.expr("_t IS NULL").alias("_isnull"),
         F.expr(bks_sql).alias("_bks"),
     )
@@ -476,13 +484,13 @@ def lang_id_scores(
             F.expr(sql_round_half_up(pooled_sql, 4)).alias(f"_l_{lang}")
         )
     scored = staged.select(
-        id_col, "_isnull", F.size("_bks").alias("_ng"), *logit_cols
+        F.col(id_ref), "_isnull", F.size("_bks").alias("_ng"), *logit_cols
     )
     top_sql = "greatest(" + ", ".join(
         f"_l_{lang}" for lang in LANGID_LANGS
     ) + ")"
     ranked = scored.selectExpr(
-        id_col, "_isnull", "_ng",
+        id_ref, "_isnull", "_ng",
         *[f"_l_{la}" for la in LANGID_LANGS],
         f"{top_sql} AS _top",
     )
@@ -496,7 +504,7 @@ def lang_id_scores(
     # the bare biases — the same silent-flip class the r9 advice
     # flagged on the quality classifier)
     return ranked.selectExpr(
-        id_col,
+        id_ref,
         "CASE WHEN _isnull THEN CAST(NULL AS BIGINT) "
         "ELSE CAST(_ng AS BIGINT) END AS n_grams",
         f"CASE WHEN _isnull THEN CAST(NULL AS STRING) "
@@ -548,7 +556,7 @@ def _langid_arrow(
             n_g: list[int | None] = []
             preds: list[str | None] = []
             scores: list[float | None] = []
-            for text in pdf[text_col].astype(object):
+            for text in pdf["_text"].astype(object):
                 if not isinstance(text, str):
                     n_g.append(None)
                     preds.append(None)
@@ -569,15 +577,24 @@ def _langid_arrow(
                 scores.append(float(logits[k]))
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "_id": pdf["_id"].to_numpy(),
                     "n_grams": pd.array(n_g, dtype="Int64"),
                     "lang_pred": pd.array(preds, dtype="string"),
                     "lang_score": pd.array(scores, dtype="Float64"),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(
-        score,
-        f"{id_col} {id_type}, n_grams long, lang_pred string, "
-        "lang_score double",
+    # mapInPandas resolves its input columns by unquoted name, so the
+    # caller's columns ride under internal names
+    return (
+        df.select(
+            F.col(_quote(id_col)).alias("_id"),
+            F.col(_quote(text_col)).alias("_text"),
+        )
+        .mapInPandas(
+            score,
+            f"_id {id_type}, n_grams long, lang_pred string, "
+            "lang_score double",
+        )
+        .withColumnRenamed("_id", id_col)
     )

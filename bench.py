@@ -21,7 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from aws_de_final_project_spark.session import get_spark  # noqa: E402
+from aws_de_final_project_spark.session import (  # noqa: E402
+    default_parallelism,
+    get_spark,
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -540,26 +543,26 @@ LINE_BUDGET = 1800
 NOISY_SPREAD_FRACTION = 0.5
 
 
-def run_quality(load_start, load_end, warm, spread) -> dict:
+def run_quality(load_start, load_end, warm, spread, *, cpus: int) -> dict:
     """Self-describing run-quality block for the bench artifacts.
 
-    ``noisy`` is True when either (a) the 1-min load average BEFORE
-    this process started any Spark work already showed substantial
-    external CPU demand (> 25% of the cores this bench assumes it
-    owns), or (b) a meaningful share of queries (> max(3, 10%))
+    ``cpus`` is the bench's core budget (the ``local[N]`` its session
+    runs on), recorded as given. ``noisy`` is True when either (a) the
+    1-min load average BEFORE this process started any Spark work
+    already showed substantial external CPU demand (> 25% of that
+    budget), or (b) a meaningful share of queries (> max(3, 10%))
     had rep spread > NOISY_SPREAD_FRACTION of their median — the
     within-run signature of cross-process contention."""
-    ncpu = os.cpu_count() or 32
     noisy_queries = sorted(
         n for n in warm
         if spread.get(n, 0.0) > NOISY_SPREAD_FRACTION * max(warm[n], 1e-3)
     )
-    external_load = load_start[0] > ncpu / 4
+    external_load = load_start[0] > cpus / 4
     widespread = len(noisy_queries) > max(3, len(warm) // 10)
     return {
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
-        "cpus": ncpu,
+        "cpus": cpus,
         "noisy_queries": noisy_queries,
         "noisy": bool(external_load or widespread),
     }
@@ -612,7 +615,8 @@ def main() -> None:
     # sample external load BEFORE any Spark work: once the bench is
     # running, loadavg mostly measures the bench itself
     load_start = os.getloadavg()
-    spark = get_spark("bench")
+    cpus = default_parallelism()
+    spark = get_spark("bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM/codegen paths so query timings are not startup noise
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -674,7 +678,9 @@ def main() -> None:
     # so it fits the driver's output-capture window — BENCH_r04/r05
     # came back "parsed": null because this line had grown past it
     # (VERDICT r5 item 2).
-    quality = run_quality(load_start, os.getloadavg(), warm, warm_spread)
+    quality = run_quality(
+        load_start, os.getloadavg(), warm, warm_spread, cpus=cpus
+    )
     detail = {
         "queries_warm": warm,
         "queries_warm_spread": warm_spread,

@@ -1,7 +1,8 @@
 """Subprocess worker for tests/test_catalog.py.
 
 Phase ``create`` builds a hive-metastore-backed warehouse (persistent
-external tables + the crimes pipeline with persistent views) and
+external tables + two runs of the crimes pipeline with persistent
+views, each run's views reading that run's cached snapshot) and
 exits; phase ``read`` opens a FRESH JVM against the same metastore
 and proves every catalog object survived the process restart — the
 Glue-catalog durability the reference gets from AWS
@@ -45,8 +46,14 @@ def create(root: str) -> None:
 
     from aws_de_final_project_spark import pipeline
     from aws_de_final_project_spark.sources.registry import load_tables
-    from tests.crimes_fixture import generate_crimes_rows, write_crimes_csv
-    from tests.test_reference_replay import CRIME_SCHEMA
+    from tests.crimes_fixture import (
+        generate_crimes_rows,
+        write_community_areas_csv,
+    )
+    from tests.test_reference_replay import (
+        CRIME_SCHEMA,
+        check_one_cached_snapshot_per_run,
+    )
 
     load_tables(
         spark,
@@ -61,23 +68,9 @@ def create(root: str) -> None:
     )
     landing = os.path.join(root, "input")
     os.makedirs(landing, exist_ok=True)
-    write_crimes_csv(
-        os.path.join(landing, "recent_source_data_t0.csv"),
-        generate_crimes_rows(n=1500),
-    )
     supporting = os.path.join(root, "supporting")
     os.makedirs(supporting, exist_ok=True)
-    import csv
-
-    from tests.crimes_fixture import community_area_rows
-
-    with open(
-        os.path.join(supporting, "community_areas.csv"), "w", newline=""
-    ) as f:
-        rows = community_area_rows()
-        w = csv.DictWriter(f, fieldnames=list(rows[0]))
-        w.writeheader()
-        w.writerows(rows)
+    write_community_areas_csv(os.path.join(supporting, "community_areas.csv"))
     cfg = pipeline.PipelineConfig(
         landing_dir=landing,
         processed_dir=os.path.join(root, "processed"),
@@ -87,8 +80,13 @@ def create(root: str) -> None:
         schema=CRIME_SCHEMA,
         supporting={"community_areas": supporting},
     )
-    views = pipeline.run(spark, cfg, persistent=True)
-    assert "arrest_pct_by_community_violent" in views, views
+    # two persistent runs: each run's views read that run's cached
+    # snapshot of the catalog table, and the second releases the first
+    rows = generate_crimes_rows(n=1500)
+    check_one_cached_snapshot_per_run(
+        spark, cfg, [rows[:1000], rows[1000:]], persistent=True
+    )
+    assert spark.catalog.tableExists("arrest_pct_by_community_violent")
     print("CREATE_OK", spark.table("processed").count(), flush=True)
     spark.stop()
 

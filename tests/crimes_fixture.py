@@ -115,3 +115,11 @@ def community_area_rows(seed: int = 42) -> list[dict]:
         }
         for i in range(1, 78)
     ]
+
+
+def write_community_areas_csv(path: str) -> None:
+    rows = community_area_rows()
+    with open(path, "w", newline="") as f:
+        w = csv.DictWriter(f, fieldnames=list(rows[0]))
+        w.writeheader()
+        w.writerows(rows)

@@ -10,11 +10,14 @@ import json
 
 import bench
 
+# the core budget is an input, so the checks hold on any host
+CPUS = 8
+
 
 def _check(warm):
     quality = bench.run_quality(
         (1.23, 1.0, 0.9), (30.0, 20.0, 10.0), warm,
-        {n: 0.0 for n in warm},
+        {n: 0.0 for n in warm}, cpus=CPUS,
     )
     line = bench.final_line(warm, round(sum(warm.values()), 3), 0.1,
                             quality=quality)
@@ -24,6 +27,7 @@ def _check(warm):
     assert payload["queries_omitted"] == len(warm) - len(payload["queries"])
     assert payload["noisy"] is False  # zero spread + idle start load
     assert payload["load1_start"] == 1.23
+    assert quality["cpus"] == CPUS
     return payload
 
 
@@ -31,15 +35,23 @@ def test_run_quality_flags_contention():
     warm = {f"q{i}": 1.0 for i in range(40)}
     # (a) external load before the run started
     q = bench.run_quality((20.0, 5.0, 2.0), (30.0,) * 3, warm,
-                          {n: 0.0 for n in warm})
+                          {n: 0.0 for n in warm}, cpus=CPUS)
     assert q["noisy"] is True and q["noisy_queries"] == []
+    # the load threshold scales with the budget passed in, not the host
+    idle = {n: 0.0 for n in warm}
+    assert bench.run_quality((1.23,) * 3, (1.0,) * 3, warm, idle,
+                             cpus=4)["noisy"] is True
+    assert bench.run_quality((1.23,) * 3, (1.0,) * 3, warm, idle,
+                             cpus=8)["noisy"] is False
     # (b) widespread within-run spread: 5 of 40 queries > 50% spread
     spread = {n: (0.9 if i < 5 else 0.1) for i, n in enumerate(warm)}
-    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread)
+    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread,
+                          cpus=CPUS)
     assert q["noisy"] is True and len(q["noisy_queries"]) == 5
     # a couple of noisy queries alone is normal GC wobble, not a flag
     spread = {n: (0.9 if i < 2 else 0.1) for i, n in enumerate(warm)}
-    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread)
+    q = bench.run_quality((0.5, 0.5, 0.5), (30.0,) * 3, warm, spread,
+                          cpus=CPUS)
     assert q["noisy"] is False and len(q["noisy_queries"]) == 2
 
 

@@ -96,26 +96,34 @@ def test_documented_totals_match_registered_dicts():
 
 def test_documented_bench_claim_matches_committed_artifact():
     """VERDICT r11 item 6 (bench-claim drift): the LAST 'N headline
-    queries, X s warm' claim in SURVEY.md must cite the COMMITTED
-    BENCH_DETAIL.json — r11 prose cited a better uncommitted quiet
-    run (153.1 s) while the committed artifact recorded 162.476 s.
-    Claim a number, commit its artifact."""
+    queries, X s warm' claim in SURVEY.md must cite a COMMITTED
+    detail artifact and equal it exactly — r11 prose cited a better
+    uncommitted quiet run (153.1 s) while the committed artifact
+    recorded 162.476 s. The cited file must be round-stamped
+    (``BENCH_DETAIL_rNN.json``): bench.py rewrites BENCH_DETAIL.json
+    on every run, which is how r14's claim drifted. Claim a number,
+    commit its artifact under a name nothing overwrites."""
     import json
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parent.parent
-    detail = json.loads((root / "BENCH_DETAIL.json").read_text())
-    n = len(detail["queries_warm"])
-    total = round(sum(detail["queries_warm"].values()), 1)
     survey = (root / "SURVEY.md").read_text()
     m = re.findall(
-        r"(\d+) headline queries,\s+\**(\d+\.\d+)\s*s warm", survey
+        r"(\d+) headline queries,\s+\**(\d+\.\d+)\s*s warm\**"
+        r"(?:\s*\(`([^`]+)`)?",
+        survey,
     )
     assert m, "SURVEY.md no longer states a bench warm claim"
-    claimed_n, claimed_total = int(m[-1][0]), float(m[-1][1])
+    claimed_n, claimed_total, cited = int(m[-1][0]), float(m[-1][1]), m[-1][2]
+    assert re.fullmatch(r"BENCH_DETAIL_r\d+\.json", cited), (
+        f"SURVEY.md's last bench claim {m[-1][:2]} must cite its "
+        "round-stamped detail file as (`BENCH_DETAIL_rNN.json`)"
+    )
+    detail = json.loads((root / cited).read_text())
+    n = len(detail["queries_warm"])
+    total = round(sum(detail["queries_warm"].values()), 1)
     assert (claimed_n, claimed_total) == (n, total), (
-        f"SURVEY.md tail claims {m[-1]} but the committed "
-        f"BENCH_DETAIL.json records ({n}, {total}) — re-run bench.py "
-        "and update BOTH together"
+        f"SURVEY.md tail claims {m[-1][:2]} but the committed "
+        f"{cited} records ({n}, {total}) — update BOTH together"
     )

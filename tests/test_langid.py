@@ -169,6 +169,26 @@ def test_arrow_matches_sql_exactly(spark):
     assert s[2] == (None, None, None)
 
 
+def test_awkward_id_and_text_column_names(spark):
+    """Id and text columns whose names hold a space, a dot or a
+    backtick are taken literally on both impls and keep their names."""
+    rows = [(1, "the cat sat on the mat"), (2, "le chat est sur la table")]
+    plain = {
+        r.doc_id: tuple(r)[1:]
+        for r in LI.lang_id_scores(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            "text", "doc_id", impl="sql",
+        ).collect()
+    }
+    for id_col, text_col in (("doc id", "body.text"), ("doc.id", "te`xt")):
+        df = spark.createDataFrame(rows).toDF(id_col, text_col)
+        for impl in ("sql", "arrow"):
+            out = LI.lang_id_scores(df, text_col, id_col, impl=impl)
+            assert out.columns[0] == id_col, (impl, out.columns)
+            got = {r[0]: tuple(r)[1:] for r in out.collect()}
+            assert got == plain, (id_col, impl, got)
+
+
 def test_null_text_yields_null_prediction(spark):
     df = spark.createDataFrame([(0, None)], "doc_id long, text string")
     r = LI.lang_id_scores(df, "text", "doc_id", impl="sql").collect()[0]

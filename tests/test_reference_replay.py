@@ -17,8 +17,8 @@ from aws_de_final_project_spark import etl, pipeline
 from aws_de_final_project_spark.sources.rest_source import ingest_increment
 from tests.crimes_fixture import (
     COLUMNS,
-    community_area_rows,
     generate_crimes_rows,
+    write_community_areas_csv,
     write_crimes_csv,
 )
 
@@ -64,15 +64,9 @@ def pipeline_dirs(tmp_path_factory):
     os.makedirs(d["supporting"], exist_ok=True)
     # the community-areas dimension the reference's supporting/
     # crawler registers (cdk_stack.py:113-134)
-    import csv as _csv
-
-    with open(
-        os.path.join(d["supporting"], "community_areas.csv"), "w", newline=""
-    ) as f:
-        rows = community_area_rows()
-        w = _csv.DictWriter(f, fieldnames=list(rows[0]))
-        w.writeheader()
-        w.writerows(rows)
+    write_community_areas_csv(
+        os.path.join(d["supporting"], "community_areas.csv")
+    )
     return d
 
 
@@ -250,3 +244,53 @@ def test_full_pipeline_and_views(spark, pipeline_dirs, crimes_rows, tmp_path):
         ).fetchall()
     )
     assert s_wd == d_wd
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def check_one_cached_snapshot_per_run(spark, cfg, batches, persistent=False):
+    """Land each batch, run the pipeline, then query every view. After
+    every run ``processed`` is cached, the views count exactly the rows
+    landed so far (a stale snapshot would miss the new batch), and the
+    session holds one persistent RDD for it: the run's re-registration
+    released the previous run's snapshot."""
+    before = _persistent_rdd_ids(spark)
+    held = []
+    landed = 0
+    for k, batch in enumerate(batches):
+        write_crimes_csv(
+            os.path.join(cfg.landing_dir, f"snapshot_batch{k}.csv"), batch
+        )
+        landed += len(batch)
+        views = pipeline.run(spark, cfg, persistent=persistent)
+        assert spark.catalog.isCached("processed")
+        for view in views:
+            spark.table(view).collect()
+        total = spark.sql(
+            "SELECT sum(`count`) FROM count_by_crime_type"
+        ).first()[0]
+        assert total == landed, f"run {k}: views see {total} of {landed}"
+        held.append(_persistent_rdd_ids(spark) - before)
+    assert [len(ids) for ids in held] == [1] * len(batches), held
+    assert len(set().union(*held)) == len(batches), held
+
+
+def test_views_read_one_cached_snapshot_per_run(spark, crimes_rows, tmp_path):
+    supporting = tmp_path / "supporting"
+    os.makedirs(tmp_path / "input")
+    os.makedirs(supporting)
+    write_community_areas_csv(str(supporting / "community_areas.csv"))
+    cfg = pipeline.PipelineConfig(
+        landing_dir=str(tmp_path / "input"),
+        processed_dir=str(tmp_path / "processed"),
+        checkpoint_dir=str(tmp_path / "checkpoint"),
+        state_path=str(tmp_path / "state" / "hwm.json"),
+        sql_dir=os.path.join(os.path.dirname(os.path.dirname(__file__)), "sql"),
+        schema=CRIME_SCHEMA,
+        supporting={"community_areas": str(supporting)},
+    )
+    check_one_cached_snapshot_per_run(
+        spark, cfg, [crimes_rows[:1500], crimes_rows[1500:2000]]
+    )

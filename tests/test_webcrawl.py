@@ -1410,6 +1410,49 @@ class TestImageCaptionPairs:
         }
 
 
+# URLs carrying a line terminator: Java's ``$`` matches before a final
+# one and its ``.`` stops at one, where RE2 (the DuckDB twin) does not
+NEWLINE_URLS = [
+    "http://x.com#f\nrest",
+    "http://x.com#f\r\nrest",
+    "http://www.x.com\n#f",
+    "http://x.com:80\n",
+    "https://WWW.x.com:443\r\n",
+    "http://x.com:80\n\n",
+    "http://x.com/a/\n",
+    "http://x.com\n/p?b=1&a=2",
+    "\nhttp://x.com/",
+    "http://x.com/p?utm_source=a\n&b=1#f\n",
+]
+
+
+def test_canonicalize_newline_urls_match_duckdb_twin(spark):
+    """canonicalize_url and its host equal the DuckDB twin
+    (``__spark_entry__._URL_CANON_CTES``) on newline-bearing URLs."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    urls = spark.createDataFrame(
+        list(enumerate(NEWLINE_URLS)), "i int, url string"
+    )
+    got = (
+        WC.with_canonical_url(urls, "url")
+        .orderBy("i")
+        .select("canon_url", "host")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.register("urls_in", urls.toPandas())
+    want = con.execute(
+        f"WITH urls AS (SELECT * FROM urls_in), {entrymod._URL_CANON_CTES} "
+        "SELECT canon_url, host FROM withdomain ORDER BY i"
+    ).fetchall()
+    con.close()
+    for url, g, w in zip(NEWLINE_URLS, got, want, strict=True):
+        assert tuple(g) == w, (url, tuple(g), w)
+
+
 def test_url_host_direct_equals_canonicalize_chain(spark):
     """url_host_direct must be VALUE-IDENTICAL to
     url_host(canonicalize_url(u)) — the r14 host-graph hot-path
@@ -1447,6 +1490,7 @@ def test_url_host_direct_equals_canonicalize_chain(spark):
         "    ",
         "javascript:void(0)",
         "http://UPPER.www.Lower.org/p",
+        *NEWLINE_URLS,
     ]
     df = spark.createDataFrame([(c,) for c in cases], "u string")
     got = df.select(
